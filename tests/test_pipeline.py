@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from turtle_spark.core.parser import parse_triples
@@ -64,6 +65,70 @@ def test_manifest_partial_resume(spark, tmp_path):
     # fingerprint change invalidates
     _, resumed3 = m.load_or_compute(spark, "s1", "fp2", compute)
     assert resumed3 is False and len(calls) == 2
+
+
+def _crash_on_commit(m: StageManifest, monkeypatch) -> None:
+    """Make the record rename fail, i.e. crash after the data write."""
+
+    def crash(stage, record):
+        raise RuntimeError(f"crash before committing {stage}")
+
+    monkeypatch.setattr(m, "_write", crash)
+
+
+def test_manifest_crash_between_data_write_and_commit(spark, tmp_path, monkeypatch):
+    """A run that crashes after overwriting a stage's data but before
+    its record commits must not leave the previous record pointing at
+    the new data: a rerun under the old fingerprint recomputes."""
+    m = StageManifest(tmp_path / "wd")
+
+    def rows_f():
+        return spark.range(10)
+
+    m.load_or_compute(spark, "s", "F", rows_f)
+    _crash_on_commit(m, monkeypatch)
+    with pytest.raises(RuntimeError, match="crash before committing"):
+        m.load_or_compute(spark, "s", "G", lambda: spark.range(1000, 1003))
+    monkeypatch.undo()
+
+    out, resumed = m.load_or_compute(spark, "s", "F", rows_f)
+    assert sorted(r.id for r in out.collect()) == list(range(10))
+    assert not resumed
+
+    # an unparsable record is an uncommitted stage, not an error
+    (tmp_path / "wd" / "s.manifest.json").write_text('{"stage": "s", "fi')
+    assert m.read("s") is None
+    calls = []
+    out, resumed = m.load_or_compute(
+        spark, "s", "F", lambda: calls.append(1) or rows_f()
+    )
+    assert not resumed and calls == [1]
+    assert sorted(r.id for r in out.collect()) == list(range(10))
+    assert m.is_committed("s", "F")
+
+
+def test_chunked_extract_crash_between_data_write_and_commit(spark, tmp_path, monkeypatch):
+    from turtle_spark.plans.pipeline import chunked_extract
+
+    docs_f = generate_docs(spark, 40, seed=5)
+    docs_g = generate_docs(spark, 40, seed=6)
+    m = StageManifest(tmp_path / "wd")
+    want, _ = chunked_extract(spark, docs_f, m, "F", n_chunks=2)
+    want = sorted(want.collect())
+
+    _crash_on_commit(m, monkeypatch)
+    with pytest.raises(RuntimeError, match="crash before committing"):
+        chunked_extract(spark, docs_g, m, "G", n_chunks=2)
+    monkeypatch.undo()
+
+    got, resumed = chunked_extract(spark, docs_f, m, "F", n_chunks=2)
+    assert sorted(got.collect()) == want
+    assert resumed == ["extract_chunk_0001"]
+
+
+def test_manifest_rejects_uri_workdir():
+    with pytest.raises(ValueError, match="local filesystem path"):
+        StageManifest("file:///tmp/wd")
 
 
 def test_dataframe_fingerprint_partition_invariant(spark):

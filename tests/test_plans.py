@@ -83,3 +83,31 @@ def test_minhash_signature_is_pandas_udf(spark):
     plan = _plan(linking.minhash_terms(terms))
     assert "ArrowEvalPython" in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_candidate_pairs_one_shuffle_no_join(spark):
+    """With the pipeline's arguments, the bucket cap's window and the
+    member aggregate share ONE (band_index, band_hash) exchange, pairs
+    expand in-array (no Join), and the banding UDF runs once."""
+    from pyspark.sql import functions as F
+
+    from turtle_spark.operators import linking
+
+    terms = spark.createDataFrame(
+        [(f"http://ex.org/entity/Family{i % 12}/variant-{i:03d}",) for i in range(120)],
+        "term string",
+    ).select(F.xxhash64("term").alias("term_id"), "term")
+    pairs = linking.candidate_pairs(
+        linking.lsh_band_keys(terms),
+        bucket_cap=linking.DEFAULT_BUCKET_CAP,
+        src_degree_cap=8,
+        neighbor_window=8,
+        salt_cap_order=True,
+    )
+    assert pairs.collect()  # executes, so the plan below is AQE's final one
+    final = _plan(pairs).split("== Initial Plan ==")[0]
+    assert final.count("Exchange hashpartitioning(band_index") == 1
+    assert "Window [row_number()" in final
+    assert "keys=[band_index" in final
+    assert "Join" not in final
+    assert final.count("ArrowEvalPython") == 1

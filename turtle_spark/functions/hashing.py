@@ -41,15 +41,6 @@ def char_shingle_hashes(text: str, k: int = 5) -> np.ndarray:
     return np.unique(hashes)
 
 
-def word_shingle_hashes(text: str, n: int = 3) -> np.ndarray:
-    """Distinct hashes of word n-grams (whitespace tokenization)."""
-    words = text.split()
-    if len(words) < n:
-        return np.empty(0, dtype=np.uint64)
-    grams = [" ".join(words[i : i + n]) for i in range(len(words) - n + 1)]
-    return np.unique(np.array([stable_str_hash(g) for g in grams], dtype=np.uint64))
-
-
 def stable_str_hash(s: str) -> int:
     """64-bit FNV-1a — process-independent string hash."""
     h = 0xCBF29CE484222325

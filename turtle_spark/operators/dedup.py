@@ -5,12 +5,12 @@ each tier shrinks the next tier's input:
 
 1. **exact** — sha256 content hash, groupBy; map-side partial
    aggregation makes this one cheap shuffle of 32-byte keys;
-2. **ngram-Jaccard** — word-shingle inverted index join; exact but
+2. **ngram-Jaccard** — word-shingle inverted index; exact but
    quadratic per shared shingle, so shingle posting lists are capped
    (same skew reasoning as the LSH bucket cap);
 3. **MinHash-LSH** — probabilistic blocking, reuses the linking
    machinery (turtle_spark.operators.linking) over document text;
-4. **SimHash** — 64-bit sketch, Hamming-band self-join;
+4. **SimHash** — 64-bit sketch, Hamming-band blocking;
 5. **embedding-cosine** — LSH-gated exact cosine edges over an
    embedding column, connected components, keep-smallest canonical.
 
@@ -142,19 +142,14 @@ def ngram_jaccard_pairs(
     posting_cap: int | None = 1000,
     hash_grams: bool = True,
 ) -> DataFrame:
-    """Exact word-n-gram Jaccard similar pairs via inverted-index join.
+    """Exact word-n-gram Jaccard similar pairs via an inverted index.
 
     Plan shape: explode distinct n-grams per doc -> (gram, doc) posting
-    lists capped at ``posting_cap`` (stop-gram protection) -> self-join
-    on gram -> per-pair intersection counts -> Jaccard against per-doc
-    gram counts.  One shuffle on gram, one on the pair key.
-
-    The capping window doubles as the plan's materialization point:
-    both self-join branches descend from the SAME windowed exchange, so
-    Spark reuses one shuffle and the (expensive) n-gram explode runs
-    once.  ``posting_cap=None`` skips it — measured 2x SLOWER despite
-    one less shuffle, because each join branch then re-explodes the
-    corpus; keep a cap (it is also the stop-gram skew bound at 100 TB).
+    lists capped at ``posting_cap`` (stop-gram protection) and expanded
+    in-array (``skew.capped_block_pairs``) -> per-pair intersection
+    counts -> Jaccard against per-doc gram counts.  One shuffle on
+    gram, one on the pair key.  ``posting_cap=None`` keeps every
+    posting; keep a cap at 100 TB (it is the stop-gram skew bound).
 
     ``hash_grams`` shuffles 8-byte xxhash64 gram keys instead of gram
     strings (the join/window key shrinks ~3x; a 64-bit collision would
@@ -187,36 +182,13 @@ def ngram_jaccard_pairs(
     )
     counts = doc_grams.groupBy("id").agg(F.count("*").alias("n_grams"))
 
-    # posting lists are aggregated and pairs expanded IN-ARRAY — a
-    # gram-keyed self-join would duplicate the whole explode subtree
-    # (exchange reuse does not fire across differently-aliased join
-    # branches).  The cap (keep the smallest ``posting_cap`` doc ids,
-    # the stop-gram skew bound) is applied by a row_number window
-    # BEFORE the list materializes: slice(collect_list(...)) would
-    # gather the whole posting list on the final reducer first, so a
-    # stop-gram in 10^8 docs would OOM it at web scale; the window
-    # sorts (and spills) instead, and its exchange is reused by the
-    # groupBy on the same key.  Singleton grams can never witness a
-    # pair and are dropped (Zipf tail).
+    # posting lists capped to their ``posting_cap`` smallest doc ids
+    # (the stop-gram skew bound) and expanded in-array; singleton grams
+    # can never witness a pair and are dropped (Zipf tail)
     cap = posting_cap if posting_cap is not None else (1 << 31) - 1
-    w_cap = Window.partitionBy("gram").orderBy("id")
-    postings = (
-        doc_grams.withColumn("_rn", F.row_number().over(w_cap))
-        .where(F.col("_rn") <= cap)
-        .groupBy("gram")
-        .agg(F.sort_array(F.collect_list("id")).alias("ms"))
-        .where(F.size("ms") >= 2)
-    )
-    pair_expr = F.expr(
-        """
-        flatten(transform(ms, (x, i) ->
-          transform(slice(ms, i + 2, size(ms) - i - 1), y ->
-            struct(x AS id1, y AS id2))))
-        """
-    )
     inter = (
-        postings.select(F.explode(pair_expr).alias("p"))
-        .groupBy("p.id1", "p.id2")
+        skew.capped_block_pairs(doc_grams, ["gram"], "id", "id", cap)
+        .groupBy(F.col("x").alias("id1"), F.col("y").alias("id2"))
         .agg(F.count("*").alias("n_common"))
     )
     return (
@@ -303,18 +275,16 @@ def hamming_band_pairs(
 
     Band the sketch into ``n_bands`` chunks; pairs within
     ``max_hamming`` (< n_bands) must collide on at least one chunk
-    (pigeonhole), so the self-join is band-blocked rather than
-    quadratic.  Shared by the SimHash text tier and the perceptual-
-    hash image tier — any 64-bit content sketch dedups through this
-    one blocked join.
+    (pigeonhole), so pairs are band-blocked rather than quadratic.
+    Shared by the SimHash text tier and the perceptual-hash image
+    tier — any 64-bit content sketch dedups through this one blocked
+    expansion.
 
     ``bucket_cap`` bounds each (band, chunk) bucket to its smallest
     ids — the same stop-key skew bound as the MinHash/ngram tiers
-    (boilerplate-heavy corpora concentrate sketch chunks).  The cap
-    is a row_number window, not slice(collect_list(...)), so reducer
-    memory stays bounded for a hot chunk at web scale; dropped
-    candidates only cost recall, never the correctness of retained
-    pairs."""
+    (boilerplate-heavy corpora concentrate sketch chunks;
+    ``skew.capped_block_pairs``); dropped candidates only cost recall,
+    never the correctness of retained pairs."""
     width = 64 // n_bands
     sk = sketches.select(
         F.col(id_col).alias("id"), F.col(hash_col).alias("sketch")
@@ -334,28 +304,16 @@ def hamming_band_pairs(
             ])
         ).alias("bk"),
     ).select("id", "sketch", "bk.band", "bk.chunk")
-    # pairs expand in-array per bucket (one aggregation) — a self-join
-    # would duplicate the whole sketch-producing subtree (usually a
-    # Python UDF), once per differently-aliased branch, since exchange
-    # reuse does not fire across them
-    w_cap = Window.partitionBy("band", "chunk").orderBy("id")
-    members = (
-        banded.withColumn("_rn", F.row_number().over(w_cap))
-        .where(F.col("_rn") <= bucket_cap)
-        .groupBy("band", "chunk")
-        .agg(F.sort_array(F.collect_list(F.struct("id", "sketch"))).alias("ms"))
-        .where(F.size("ms") >= 2)
-    )
-    pair_expr = F.expr(
-        """
-        flatten(transform(ms, (x, i) ->
-          transform(slice(ms, i + 2, size(ms) - i - 1), y ->
-            struct(x.id AS id1, x.sketch AS h1, y.id AS id2, y.sketch AS h2))))
-        """
-    )
     pairs = (
-        members.select(F.explode(pair_expr).alias("p"))
-        .select("p.id1", "p.h1", "p.id2", "p.h2")
+        skew.capped_block_pairs(
+            banded, ["band", "chunk"], F.struct("id", "sketch"), "id", bucket_cap
+        )
+        .select(
+            F.col("x.id").alias("id1"),
+            F.col("x.sketch").alias("h1"),
+            F.col("y.id").alias("id2"),
+            F.col("y.sketch").alias("h2"),
+        )
         .dropDuplicates(["id1", "id2"])
     )
     hamming = F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))
@@ -375,7 +333,7 @@ def simhash_near_duplicates(
     bucket_cap: int = 1024,
 ) -> DataFrame:
     """SimHash near-dup pairs: 64-bit text sketch per document, then
-    the shared Hamming band-blocked pair join (hamming_band_pairs)."""
+    the shared Hamming band-blocked pair expansion (hamming_band_pairs)."""
     from turtle_spark.functions.hashing import simhash64_batch
 
     @pandas_udf(T.LongType())
@@ -503,8 +461,6 @@ def build_novelty_index(
     ONCE per snapshot, persisted, and joined against by every incoming
     batch (training pipelines dedup new crawls against everything
     already ingested, not just within the batch)."""
-    from turtle_spark.operators import linking
-
     # pinned: an index is a MATERIALIZED artifact — at real scale both
     # tables are written once per snapshot and read by every batch;
     # in-memory use models that with persist, so screening does not
@@ -560,8 +516,6 @@ def screen_against_index(
     exact -> smallest matching corpus id; near -> highest Jaccard,
     ties to the smallest id.
     """
-    from turtle_spark.operators import linking
-
     # ``pin_batch=False`` for callers that invoke this repeatedly on a
     # long-lived session (the streaming micro-batch path): pin() has no
     # unpersist hook here, so a pin per trigger would accumulate one
@@ -620,16 +574,13 @@ def screen_against_index(
             "_old",
         )
     )
-    inter = F.size(F.array_intersect("shs", "_oshs"))
-    union = F.col("nw") + F.col("_onw") - inter
-    jac = F.when(union == 0, F.lit(1.0)).otherwise(
-        inter.cast("double") / union.cast("double")
-    )
     w_best = Window.partitionBy("doc_id").orderBy(
         F.col("jaccard").desc(), F.col("_old")
     )
     near = (
-        joined.withColumn("jaccard", jac)
+        joined.withColumn(
+            "jaccard", linking.profile_jaccard("shs", "nw", "_oshs", "_onw")
+        )
         .where(F.col("jaccard") >= threshold)
         .withColumn("_rn", F.row_number().over(w_best))
         .where(F.col("_rn") == 1)

@@ -63,18 +63,6 @@ HAS_MEDIA = DOC_NS + "hasMedia"
 DOC_IRI_PREFIX = "http://turtle-spark.dev/doc/"
 
 
-def assemble_text(spans) -> str:
-    """Concatenate text spans in offset order (Python-side mirror of
-    ``assembled_text_col`` — used by tests and small tools).
-
-    The per-row invariant (span-sequence equality) is preserved because
-    assembly only *reads* spans; documents flow through extraction
-    untouched.
-    """
-    ordered = sorted(spans, key=lambda s: s["offset"])
-    return "\n".join(s["text"] for s in ordered if s["kind"] == "text")
-
-
 def assembled_text_col() -> F.Column:
     """JVM-side span assembly: filter text spans, sort by offset, join.
 

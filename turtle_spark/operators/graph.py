@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from turtle_spark.operators.skew import capped_block_pairs, pin
+
 # fixed-point scale for PageRank: micro-micro units.  10^12 per unit
 # rank leaves int64 headroom of ~9.2e6 units — safe for any realistic
 # per-node rank mass (total mass is bounded by n_nodes units only when
@@ -169,8 +171,6 @@ def pagerank(
     the standard iterative-graph trade (GraphX does the same); it is
     O(E) block storage that spills to disk at web scale.
     """
-    from turtle_spark.operators.skew import pin
-
     edges = pin(edges.select("src", "dst"))
     nodes = pin(
         edges.select(F.col("src").alias("node"))
@@ -234,8 +234,6 @@ def pagerank_resume(
     Same per-iteration plan as ``pagerank`` (one join + one groupBy,
     pinned edges/nodes/degree, periodic lineage truncation).
     """
-    from turtle_spark.operators.skew import pin
-
     edges = pin(edges.select("src", "dst"))
     nodes = pin(
         edges.select(F.col("src").alias("node"))
@@ -403,8 +401,6 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         .where(F.col("a") != F.col("b"))
         .dropDuplicates()
     )
-    from turtle_spark.operators.skew import pin
-
     # every undirected edge contributes to both endpoints' degrees
     deg = pin(
         und.select(F.col("a").alias("node"))
@@ -720,8 +716,6 @@ def bfs_levels(
         edges = edges.union(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    from turtle_spark.operators.skew import pin
-
     edges = pin(edges.dropDuplicates())
     src_col = sources.columns[0]
     visited = (
@@ -875,8 +869,6 @@ def hits(
     Returns ``(node, hub_fp, auth_fp)``; callers divide by ``10**6``
     for a float view.
     """
-    from turtle_spark.operators.skew import pin
-
     edges = pin(edges.select("src", "dst"))
     nodes = pin(
         edges.select(F.col("src").alias("node"))
@@ -966,7 +958,7 @@ def link_prediction(
     Scale shape: every pair is generated THROUGH its common neighbor
     z — one wedge expansion per z, never an all-pairs join.  Each z's
     sorted neighbor list is capped at ``neighbor_cap`` BEFORE it
-    materializes (row_number window, the ``candidate_pairs`` bucket-cap
+    materializes (``skew.capped_block_pairs``, the bucket-cap
     contract: a celebrity z with 10^6 neighbors would otherwise emit
     C(10^6, 2) wedges from one reducer).  The cap keeps each z's
     ``neighbor_cap`` smallest neighbors deterministically, so fan-out
@@ -983,25 +975,16 @@ def link_prediction(
         .select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
     )
     deg = adj.groupBy("node").agg(F.count("*").alias("deg"))
-    w = Window.partitionBy("node").orderBy("nbr")
+    # a block that yields a pair has >= 2 members, so its node has
+    # deg >= 2: the degree join only attaches the wedge weight
     wedges = (
-        adj.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= neighbor_cap)
+        capped_block_pairs(adj, ["node"], "nbr", "nbr", neighbor_cap)
         .join(deg, "node")
-        .where(F.col("deg") >= 2)
-        .groupBy("node", "deg")
-        .agg(F.sort_array(F.collect_list("nbr")).alias("ns"))
         .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ns, (x, i) -> "
-                    "transform(slice(ns, i + 2, size(ns) - i - 1), y -> "
-                    "struct(x AS a, y AS b))))"
-                )
-            ).alias("p"),
+            F.col("x").alias("a"),
+            F.col("y").alias("b"),
             F.expr(f"{_AA_SCALE} div (length(bin(deg)) - 1)").alias("w"),
         )
-        .select("p.a", "p.b", "w")
     )
     scored = (
         wedges.groupBy("a", "b")
@@ -1089,8 +1072,6 @@ def personalized_pagerank(
     Non-seed nodes hold rank 0 until inflow reaches them — only the
     seed-reachable subgraph ever carries mass.
     """
-    from turtle_spark.operators.skew import pin
-
     edges = pin(edges.select("src", "dst"))
     nodes = pin(
         edges.select(F.col("src").alias("node"))
@@ -1197,8 +1178,6 @@ def shortest_paths(
 
     Returns ``(landmark, node, dist)`` for every reached node.
     """
-    from turtle_spark.operators.skew import pin
-
     edges = pin(edges.select("src", "dst", F.col("w").cast("long").alias("w")))
     state = landmarks.select(
         F.col(landmarks.columns[0]).alias("landmark")

@@ -4,18 +4,20 @@ Pipeline (SURVEY.md §3.4):
 
     triples -> mentions(term, term_id, kind)
             -> MinHash signatures (Arrow-batched pandas UDF, numpy inside)
-            -> LSH band explosion -> bucket self-join (candidate pairs)
+            -> LSH band explosion -> capped in-array bucket expansion
+               (candidate pairs)
             -> exact-similarity verification -> edges(src, dst)
 
 Scale design — this stage is where a naive implementation dies at
 100 TB, so the shuffle story is explicit:
 
-* the self-join key is ``(band_index, band_hash)``; bucket sizes are
-  **capped deterministically** before the join (hot buckets come from
-  stop-word-like terms; capping bounds the worst key at cap², making
-  AQE skew handling a safety net rather than the plan).  Dropped
-  candidates are only ever *extra* recall work, never correctness of
-  retained pairs;
+* the bucket key is ``(band_index, band_hash)``; bucket sizes are
+  **capped deterministically** before pairs expand
+  (``skew.capped_block_pairs``: hot buckets come from stop-word-like
+  terms; capping bounds the worst key at cap², making AQE skew
+  handling a safety net rather than the plan).  Dropped candidates
+  are only ever *extra* recall work, never correctness of retained
+  pairs;
 * signatures are computed once per *distinct* term, not per
   occurrence: dedup first, then a narrow pandas_udf pass;
 * candidate pairs are verified with exact shingle Jaccard inside an
@@ -40,6 +42,7 @@ from turtle_spark.functions.hashing import (
     minhash_permutations,
     minhash_signatures_batch,
 )
+from turtle_spark.operators.skew import capped_block_pairs, pin, spread
 
 DEFAULT_NUM_PERM = 128
 DEFAULT_BANDS = 32
@@ -138,8 +141,6 @@ def lsh_band_keys(
     run this compute-dense UDF on 1-2 cores regardless of cluster
     width (the pipeline's measured edges-stage scaling bottleneck).
     No-op whenever the scan already has a partition per core."""
-    from turtle_spark.operators.skew import spread
-
     a, b = minhash_permutations(num_perm, seed)
     terms = spread(terms, "term_id")
 
@@ -168,26 +169,11 @@ def candidate_pairs(
 ) -> DataFrame:
     """Expand LSH buckets into SKINNY candidate pairs (src, dst).
 
-    ONE aggregation, no self-join: each bucket is capped to its
-    ``bucket_cap`` smallest ids BEFORE the member list materializes —
-    a ``row_number`` window (sort-based, spills to disk) rather than
-    ``slice(collect_list(...))``, because collect_list gathers the
-    ENTIRE bucket on the final reducer before any slice runs, so a
-    stop-word-like bucket with 10^8 members would OOM a reducer at
-    web scale.  The window's exchange is reused by the groupBy (same
-    key), so this costs a sort, not a second shuffle.  Retained set is
-    identical: the cap smallest ids per key, fan-out bounded at cap².
-    Pairs then expand in-array by a JVM ``transform`` expression.
-
-    Why not a self-join: joining ``capped`` to itself duplicates the
-    whole upstream subtree — Spark's exchange reuse does not fire
-    across the differently-aliased branches, so the (expensive)
-    banding UDF and its shuffle would execute TWICE per query
-    (measured; 4 ArrowEvalPython ops in the old plan vs 2 here).  The
-    aggregate form evaluates upstream once, with one shuffle.
-
-    Everything downstream moves 16-byte id pairs only — the term
-    strings are joined back after dedup (verify_pairs).
+    ONE aggregation, no self-join: ``skew.capped_block_pairs`` caps each
+    bucket to its ``bucket_cap`` first members and expands the pairs
+    in-array, so the banding UDF upstream is evaluated once, with one
+    shuffle.  Everything downstream moves 16-byte id pairs only — the
+    term strings are joined back after dedup (verify_pairs).
 
     Three knobs bound dense-family (clique) blow-up — all share the
     ``bucket_cap`` contract (dropped candidates cost only recall, and
@@ -203,9 +189,7 @@ def candidate_pairs(
       bucket member pairs with only its ``neighbor_window`` nearest
       followers in the sorted member list (64·K pairs per bucket
       instead of C(64,2)=2016), so the raw pair stream entering the
-      dedup shuffle shrinks ~4x before anything moves.  Consecutive
-      members always pair, so each bucket's retained set stays
-      chain-connected by construction.
+      dedup shuffle shrinks ~4x before anything moves.
     * ``salt_cap_order`` — order the bucket cap by
       ``xxhash64(band_index, term_id)`` instead of ``term_id``.  With
       id-ordered capping, a family larger than ``bucket_cap`` retains
@@ -214,34 +198,19 @@ def candidate_pairs(
       per band, so across b bands ~b·cap distinct members participate
       and overlapping subsets chain the family together.
     """
-    from pyspark.sql import Window
-
     order = (
         F.xxhash64(F.col("band_index"), F.col("term_id"))
         if salt_cap_order
         else F.col("term_id")
     )
-    w = Window.partitionBy("band_index", "band_hash").orderBy(order)
-    members = (
-        buckets.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= bucket_cap)
-        .groupBy("band_index", "band_hash")
-        .agg(F.sort_array(F.collect_list("term_id")).alias("ms"))
-        .where(F.size("ms") >= 2)
-    )
-    win = (
-        "size(ms) - i - 1"
-        if neighbor_window is None
-        else f"least({int(neighbor_window)}, size(ms) - i - 1)"
-    )
-    pair_expr = F.expr(
-        f"""
-        flatten(transform(ms, (x, i) ->
-          transform(slice(ms, i + 2, {win}), y ->
-            struct(x AS src, y AS dst))))
-        """
-    )
-    raw = members.select(F.explode(pair_expr).alias("p")).select("p.src", "p.dst")
+    raw = capped_block_pairs(
+        buckets,
+        ["band_index", "band_hash"],
+        "term_id",
+        order,
+        bucket_cap,
+        window=neighbor_window,
+    ).select(F.col("x").alias("src"), F.col("y").alias("dst"))
     if src_degree_cap is None:
         return raw.dropDuplicates(["src", "dst"])
     # Fused dedup + degree cap: ONE groupBy(src) shuffle replaces the
@@ -276,8 +245,6 @@ def shingle_profiles(
     ``spread`` first, same rationale as ``lsh_band_keys``: a
     checkpoint-read terms table is byte-small, and byte-based
     partitioning would serialize this Arrow pass to 1-2 cores."""
-    from turtle_spark.operators.skew import spread
-
     terms = spread(terms, "term_id")
     schema = T.StructType(
         [
@@ -300,6 +267,16 @@ def shingle_profiles(
 
     return terms.withColumn("_p", prof_udf("term")).select(
         "term_id", F.col("_p.shs").alias("shs"), F.col("_p.nw").alias("nw")
+    )
+
+
+def profile_jaccard(a_shs: str, a_nw: str, b_shs: str, b_nw: str) -> F.Column:
+    """Set Jaccard of two ``shingle_profiles`` rows:
+    |A ∩ B| / (|A| + |B| - |A ∩ B|), 1.0 when both sets are empty."""
+    inter = F.size(F.array_intersect(a_shs, b_shs))
+    union = F.col(a_nw) + F.col(b_nw) - inter
+    return F.when(union == 0, F.lit(1.0)).otherwise(
+        inter.cast("double") / union.cast("double")
     )
 
 
@@ -329,8 +306,6 @@ def verify_pairs(
     Jaccard, identical to the previous numpy ``intersect1d``
     formulation, bit-for-bit (exact integer operands; IEEE
     division)."""
-    from turtle_spark.operators.skew import pin
-
     # pinned: both join branches below reference the profile subtree,
     # and Catalyst evaluates each branch separately — without the pin
     # the shingling UDF (and the scan under it) runs twice per query.
@@ -373,13 +348,8 @@ def verify_pairs(
     joined = pairs.join(a.hint("shuffle_hash"), "src").join(
         b.hint("shuffle_hash"), "dst"
     )
-    inter = F.size(F.array_intersect("_ashs", "_bshs"))
-    union = F.col("_anw") + F.col("_bnw") - inter
-    jaccard = F.when(union == 0, F.lit(1.0)).otherwise(
-        inter.cast("double") / union.cast("double")
-    )
     return (
-        joined.withColumn("jaccard", jaccard)
+        joined.withColumn("jaccard", profile_jaccard("_ashs", "_anw", "_bshs", "_bnw"))
         .where(F.col("jaccard") >= threshold)
         .select("src", "dst", "jaccard")
     )
@@ -416,79 +386,3 @@ def link_terms(
     )
     return verify_pairs(pairs, terms, shingle_k=shingle_k, threshold=threshold)
 
-
-def link_terms_incremental(
-    old_terms: DataFrame,
-    old_bands: DataFrame,
-    new_terms: DataFrame,
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-    shingle_k: int = DEFAULT_SHINGLE_K,
-    bucket_cap: int = DEFAULT_BUCKET_CAP,
-    threshold: float = DEFAULT_JACCARD,
-    candidate_cap: int = 64,
-    seed: int = 7,
-) -> DataFrame:
-    """Incremental entity linking: verified similarity edges that
-    TOUCH a new-term batch, against a standing corpus represented by
-    its persisted band index — O(batch · fanout), never O(corpus).
-
-    ``old_bands`` is the (term_id, band_index, band_hash) artifact of
-    a prior ``lsh_band_keys`` run (persist it next to the canonical
-    tables; at 10^12 terms it is the index you cannot afford to
-    rebuild per batch).  The batch's bands are computed fresh
-    (O(batch)); candidates are within-batch pairs plus batch↔corpus
-    band-key joins, the cross side capped at ``candidate_cap``
-    partners per new term (deterministic smallest-id order — the same
-    boilerplate-bucket bound the novelty screen uses).  Verification
-    recomputes shingle profiles ONLY for the batch and the touched
-    old terms (semi-join pruned), so the exact-Jaccard stage is
-    O(delta) too.
-
-    Feed the result to ``cc.incremental_components`` and the
-    canonicalization pipeline absorbs a snapshot's new mentions
-    without re-running linking over the corpus.  With caps
-    non-binding the edge set equals the full ``link_terms`` run's
-    new-touching slice bit-for-bit (pinned by test).
-    """
-    from pyspark.sql import Window
-
-    from turtle_spark.operators.skew import pin
-
-    new_bands = pin(
-        lsh_band_keys(
-            new_terms, num_perm=num_perm, bands=bands, shingle_k=shingle_k, seed=seed
-        )
-    )
-    nn = candidate_pairs(new_bands, bucket_cap=bucket_cap)
-    cross_raw = (
-        new_bands.select("band_index", "band_hash", F.col("term_id").alias("_new"))
-        .join(
-            old_bands.select(
-                "band_index", "band_hash", F.col("term_id").alias("_old")
-            ),
-            ["band_index", "band_hash"],
-        )
-        .where(F.col("_new") != F.col("_old"))
-        .select("_new", "_old")
-        .distinct()
-    )
-    w = Window.partitionBy("_new").orderBy("_old")
-    cross = (
-        cross_raw.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= candidate_cap)
-        .select(
-            F.least("_new", "_old").alias("src"),
-            F.greatest("_new", "_old").alias("dst"),
-        )
-    )
-    pairs = nn.unionByName(cross).distinct()
-    touched_old = old_terms.join(
-        pairs.select(F.col("src").alias("term_id"))
-        .unionByName(pairs.select(F.col("dst").alias("term_id")))
-        .distinct(),
-        "term_id",
-        "left_semi",
-    )
-    verify_terms = new_terms.unionByName(touched_old)
-    return verify_pairs(pairs, verify_terms, shingle_k=shingle_k, threshold=threshold)

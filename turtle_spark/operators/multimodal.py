@@ -471,7 +471,7 @@ def image_near_duplicates(
     bucket_cap: int = 1024,
 ) -> DataFrame:
     """Perceptual-hash image dedup: decode -> 64-bit grid phash ->
-    Hamming band-blocked pair join (the shared
+    Hamming band-blocked pair expansion (the shared
     dedup.hamming_band_pairs used by the SimHash text tier).  At
     10^12 documents the pair stage moves only (ref, 8-byte sketch)
     rows — payload bytes never enter a shuffle."""

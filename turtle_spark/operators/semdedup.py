@@ -40,9 +40,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from turtle_spark.operators.skew import capped_block_pairs, pin, spread
 from turtle_spark.operators.similarity import (
     _dot,
     _norm,
@@ -74,8 +75,6 @@ def _with_cluster_and_csim(
     downstream fold on a single core (no-op at cluster scale, where
     the scan already has a partition per core).
     """
-    from turtle_spark.operators.skew import spread
-
     embeddings = spread(embeddings)
     spark = embeddings.sparkSession
     cents64 = centroids.astype(np.float64)
@@ -116,46 +115,23 @@ def _cluster_pairs(
     """Capped within-cluster pair expansion + exact cosine filter:
     (cluster, id1, id2, cosine) with id1 < id2, cosine >= threshold.
 
-    In-array expansion per cluster (one aggregation, no self-join);
-    ``cluster_cap`` keeps each cluster to its smallest ids via a
-    row_number window, so reducer memory stays bounded for a
-    degenerate mega-cluster — dropped candidates cost recall only.
+    ``cluster_cap`` keeps each cluster to its smallest ids
+    (``skew.capped_block_pairs``), so a degenerate mega-cluster stays
+    bounded — dropped candidates cost recall only.
     """
-    w_cap = Window.partitionBy("cluster").orderBy(id_col)
-    members = (
-        assigned.withColumn("_rn", F.row_number().over(w_cap))
-        .where(F.col("_rn") <= cluster_cap)
-        .groupBy("cluster")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col(id_col).alias("id"),
-                        F.col(vec_col).alias("v"),
-                        F.col("_vnorm").alias("n"),
-                    )
-                )
-            ).alias("ms")
-        )
-        .where(F.size("ms") >= 2)
-    )
-    pair_expr = F.expr(
-        """
-        flatten(transform(ms, (x, i) ->
-          transform(slice(ms, i + 2, size(ms) - i - 1), y ->
-            struct(x.id AS id1, x.v AS v1, x.n AS n1,
-                   y.id AS id2, y.v AS v2, y.n AS n2))))
-        """
+    member = F.struct(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("v"),
+        F.col("_vnorm").alias("n"),
     )
     cosine = F.round(
-        _dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")), 6
+        _dot(F.col("x.v"), F.col("y.v")) / (F.col("x.n") * F.col("y.n")), 6
     )
     return (
-        members.select("cluster", F.explode(pair_expr).alias("p"))
-        .select("cluster", "p.id1", "p.v1", "p.n1", "p.id2", "p.v2", "p.n2")
+        capped_block_pairs(assigned, ["cluster"], member, id_col, cluster_cap)
         .withColumn("cosine", cosine)
         .where(F.col("cosine") >= threshold)
-        .select("cluster", "id1", "id2", "cosine")
+        .select("cluster", F.col("x.id").alias("id1"), F.col("y.id").alias("id2"), "cosine")
     )
 
 
@@ -207,7 +183,6 @@ def semantic_dedup(
     left-join and coalesce.
     """
     from turtle_spark.operators.cc import connected_components
-    from turtle_spark.operators.skew import pin
 
     cents = train_ivf_centroids(
         embeddings, n_centroids=n_clusters, seed=seed,

@@ -3,7 +3,7 @@
 AQE's skew-join splitting only rescues sort-merge joins after the fact;
 when a key's row count is pathological by construction (stop-words,
 null-ish defaults, celebrity entities), the plan should bound it up
-front.  Two tools:
+front.  The tools:
 
 * ``salted_join`` — equi-join where the LEFT side's hot keys are
   sharded across ``n_salts`` sub-keys and the RIGHT side is replicated
@@ -13,6 +13,9 @@ front.  Two tools:
   broadcastable) side.
 * ``top_keys`` — heavy-hitter detection by approximate count, for
   salting ONLY the hot keys (two-path join: salted hot + plain cold).
+* ``capped_block_pairs`` — per-block pair expansion with every block
+  capped before its member list materializes (all candidate-pair
+  generators share it).
 
 Result equality with a plain join is pinned by tests on skewed data.
 """
@@ -114,13 +117,9 @@ def pin(df: DataFrame) -> DataFrame:
     storage; MEMORY_AND_DISK spills instead of recomputing, and LRU
     eviction bounds a long session.  At cluster scale pin only what is
     O(corpus-projection) small (id + sketch columns), never raw
-    payloads.  ``TURTLE_SPARK_NO_PIN=1`` disables pinning (A/B knob)."""
-    import os
-
+    payloads."""
     from pyspark import StorageLevel
 
-    if os.environ.get("TURTLE_SPARK_NO_PIN"):
-        return df
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
@@ -149,6 +148,68 @@ def spread(df: DataFrame, *key_cols: str, min_slots: int | None = None) -> DataF
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, *key_cols) if key_cols else df.repartition(target)
+
+
+def capped_block_pairs(
+    df: DataFrame,
+    keys: list[str],
+    member,
+    order,
+    cap: int,
+    window: int | None = None,
+) -> DataFrame:
+    """Every pair of members that share a block: ``(*keys, x, y)``
+    with ``x < y`` (members are distinct within a block), one row per
+    pair per block.
+
+    The one candidate-pair generator behind LSH linking, the ngram /
+    Hamming / SemDeDup dedup tiers and link prediction.  ``member`` is
+    a column (a struct when the pair stage needs payload alongside the
+    id); each block keeps only its first ``cap`` rows by ``order`` —
+    the stop-key skew bound (hot blocks come from stop-word-like terms,
+    boilerplate, celebrity nodes): fan-out is at most C(cap, 2) per
+    block, and dropped candidates only ever cost recall, never the
+    correctness of retained pairs.
+
+    The cap is a ``row_number`` window (sort-based, spills to disk),
+    not ``slice(collect_list(...))``: collect_list gathers the ENTIRE
+    block on the final reducer before any slice runs, so a block with
+    10^8 members would OOM a reducer at web scale.  The window's
+    exchange is reused by the groupBy (same key), so the cap costs a
+    sort, not a second shuffle.
+
+    Pairs then expand in-array (a JVM ``transform`` expression), not by
+    a self-join: joining the capped table to itself duplicates the
+    whole upstream subtree — exchange reuse does not fire across the
+    differently-aliased branches, so an upstream Python UDF and its
+    shuffle would execute twice per query (measured on LSH linking: 4
+    ArrowEvalPython ops vs 2).  The aggregate form evaluates upstream
+    once, with one shuffle.
+
+    ``window`` bounds the expansion itself: each member pairs with only
+    its ``window`` nearest followers in the sorted block (cap·window
+    pairs instead of C(cap, 2)).  Consecutive members always pair, so
+    each block's retained set stays chain-connected."""
+    w = Window.partitionBy(*keys).orderBy(order)
+    blocks = (
+        df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= cap)
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(member)).alias("_ms"))
+        .where(F.size("_ms") >= 2)
+    )
+    n = "size(_ms) - i - 1"
+    if window is not None:
+        n = f"least({int(window)}, {n})"
+    pairs = F.expr(
+        f"""
+        flatten(transform(_ms, (x, i) ->
+          transform(slice(_ms, i + 2, {n}), y -> struct(x AS x, y AS y))))
+        """
+    )
+    return blocks.select(*keys, F.explode(pairs).alias("_p")).select(
+        *keys, "_p.x", "_p.y"
+    )
 
 
 def skew_report(

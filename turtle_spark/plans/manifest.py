@@ -19,10 +19,16 @@ equivalent of streaming checkpoints: at 10^12-document scale a
 transient executor-loss in stage D must not re-pay stages A-C.
 
 The manifest is plain JSON on the filesystem (one file per stage,
-written via temp-file rename for atomicity).  The same layout maps
-onto an Iceberg snapshot/metadata table when the runtime jar is
-available; the sandbox uses the parquet+JSON fallback (SURVEY.md §7
-M6) with identical logical content.
+written via temp-file rename for atomicity).  A commit first removes
+the stage's record, then overwrites ``<stage>/data``, then renames the
+new record into place — so a crash at any point leaves either the old
+record over the old data or no record (the stage recomputes), never a
+committed record over data it did not produce.  An unreadable record
+also counts as uncommitted.  Local-filesystem paths only: the atomic
+primitive is ``os.replace``, so a URI workdir raises at construction.
+The same layout maps onto an Iceberg snapshot/metadata table when the
+runtime jar is available; the sandbox uses the parquet+JSON fallback
+(SURVEY.md §7 M6) with identical logical content.
 """
 
 from __future__ import annotations
@@ -34,11 +40,18 @@ import tempfile
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 class StageManifest:
     def __init__(self, workdir: str | os.PathLike):
-        self.root = pathlib.Path(workdir)
+        s = str(workdir)
+        if "://" in s or s.startswith("file:"):
+            raise ValueError(
+                f"StageManifest needs a local filesystem path (atomic "
+                f"os.replace is its commit primitive); got {s!r}"
+            )
+        self.root = pathlib.Path(s)
         self.root.mkdir(parents=True, exist_ok=True)
 
     # -- manifest records ---------------------------------------------------
@@ -47,11 +60,13 @@ class StageManifest:
         return self.root / f"{stage}.manifest.json"
 
     def read(self, stage: str) -> dict[str, Any] | None:
-        p = self._path(stage)
-        if not p.exists():
+        """The stage's record, or None when it is missing or unparsable."""
+        try:
+            with open(self._path(stage)) as f:
+                rec = json.load(f)
+        except (FileNotFoundError, ValueError):  # ValueError: corrupt JSON
             return None
-        with open(p) as f:
-            return json.load(f)
+        return rec if isinstance(rec, dict) else None
 
     def _write(self, stage: str, record: dict[str, Any]) -> None:
         fd, tmp = tempfile.mkstemp(dir=self.root, prefix=f".{stage}.")
@@ -88,6 +103,10 @@ class StageManifest:
         """
         spark = df.sparkSession
         path = self.data_path(stage)
+        # uncommit before touching the data: until the new record is
+        # renamed into place below, a crash leaves the stage without a
+        # record (recomputed on rerun), never an old record over new data
+        self._path(stage).unlink(missing_ok=True)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -107,6 +126,8 @@ class StageManifest:
         # footers and take stage totals from ONE Spark aggregate (a
         # million-file stage pays one job, never a million driver
         # reads — and lineage detail is truncated, as before).
+        import pyarrow.parquet as pq
+
         files = sorted(
             str(p)
             for p in pathlib.Path(path).rglob("*.parquet")
@@ -114,49 +135,14 @@ class StageManifest:
         )
         n_files = len(files)
         truncated = n_files > 512
-        if n_files == 0:
-            # pathlib only sees the LOCAL filesystem; on a URI workdir
-            # (hdfs://, s3a://, file:) rglob finds nothing even though
-            # the write succeeded.  Fall back to the storage-agnostic
-            # Spark aggregate (one job, capped collect) rather than
-            # silently committing rows=0 lineage.
-            from pyspark.sql import functions as F
-
-            per_file = (
-                out.groupBy(F.input_file_name().alias("file"))
-                .agg(F.count("*").alias("rows"))
-                .orderBy("file")
-                .limit(513)
-                .collect()
-            )
-            truncated = len(per_file) > 512
-            n_files = len(per_file)
-            lineage = [
-                {"file": r["file"].rsplit("/", 1)[-1], "rows": int(r["rows"])}
-                for r in per_file[:512]
-            ]
-            if truncated:
-                rows = int(out.agg(F.count("*")).collect()[0][0] or 0)
-            else:
-                rows = sum(e["rows"] for e in lineage)
+        lineage = [
+            {"file": fp.rsplit("/", 1)[-1], "rows": pq.ParquetFile(fp).metadata.num_rows}
+            for fp in files[:512]
+        ]
+        if truncated:
+            rows = int(out.agg(F.count("*")).collect()[0][0] or 0)
         else:
-            if truncated:
-                from pyspark.sql import functions as F
-
-                head = files[:512]
-                totals = out.agg(F.count("*").alias("rows")).collect()[0]
-                rows = int(totals["rows"] or 0)
-            else:
-                head = files
-                rows = 0
-            lineage = []
-            import pyarrow.parquet as pq
-
-            for fp in head:
-                n = pq.ParquetFile(fp).metadata.num_rows
-                lineage.append({"file": fp.rsplit("/", 1)[-1], "rows": n})
-                if not truncated:
-                    rows += n
+            rows = sum(e["rows"] for e in lineage)
         self._write(
             stage,
             {
@@ -200,8 +186,6 @@ def dataframe_fingerprint(df: DataFrame, sample_cols: list[str] | None = None) -
     count + sum(xxhash64(cols)) — cheap (one aggregate) and stable
     across partitioning, which is exactly the resume contract.
     """
-    from pyspark.sql import functions as F
-
     cols = sample_cols or df.columns
     row = df.select(
         F.count("*").alias("n"),

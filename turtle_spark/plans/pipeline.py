@@ -1,7 +1,7 @@
 """The end-to-end KG-construction pipeline (SURVEY.md §3.4).
 
     docs(doc_id, spans)                                  [A: scan]
-      -> extract_triples (mapInPandas, Arrow batches)    [B: extract]
+      -> extract_triples (mapInArrow, Arrow batches)     [B: extract]
       -> media_triples (JVM explode)          ∪
       -> globalize blank nodes (column exprs)
       -> mentions -> MinHash-LSH -> verified edges       [C: link]

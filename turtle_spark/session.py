@@ -18,6 +18,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """``min(24g, half of physical RAM)``, in whole megabytes."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(24 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "turtle-spark",
     cores: int | None = None,
@@ -59,8 +65,12 @@ def get_spark(
         .config("spark.locality.wait", "0s")
         # sized for local[32]: 32 concurrent tasks allocate fast; an
         # undersized heap turns the extraction stage into a GC storm
-        # (measured 5x slowdown at 8g)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # (measured 5x slowdown at 8g).  Capped at half the host's RAM
+        # so the JVM (heap plus off-heap) fits beside the Python workers.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

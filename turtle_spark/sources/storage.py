@@ -76,10 +76,6 @@ def write_triples_iceberg(
     )
 
 
-def read_triples(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_subject(spark: SparkSession, path: str, subject: str, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """Point lookup demonstrating bucket pruning: computes the bucket
     driver-side and filters on the partition column, so only one
